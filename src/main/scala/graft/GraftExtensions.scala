@@ -110,9 +110,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  /** Register the graft_* SQL functions AND the pruning rewrite on an
-    * already-running session (the builder-time extension hook only
-    * applies to new sessions). */
+  /** Register the graft_* SQL functions, the pruning rewrite and the
+    * cover-dropping planner strategy on an already-running session (the
+    * builder-time extension hook only applies to new sessions). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val ext = new GraftExtensions
     ext.fns.foreach { case (name, usage, builder) =>
@@ -123,5 +123,6 @@ object GraftExtensions {
         graft.plans.RewriteHeadBboxFilter))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.RewriteHeadBboxFilter
+    graft.plans.DropImpliedCover.install(spark)
   }
 }

@@ -1,9 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral, JavaCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper
+import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, LongType}
 
 import graft.core.{Geometry, Morton, Polygon}
 
@@ -134,6 +136,35 @@ case class InSortedRanges(child: Expression, los: Array[Long], his: Array[Long])
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
+/** A per-query constant (Double or Long) that reaches generated code by
+  * reference. Spark writes a `Literal`'s value into the generated Java
+  * source, so two selects that differ only in a bbox edge compile two
+  * classes; with the value in the references array instead, plans that
+  * differ only in their constants share one compiled class. Not
+  * foldable, so the optimizer cannot fold it back into a literal. */
+case class QueryConst(value: Any, dataType: DataType) extends LeafExpression {
+  require((dataType == DoubleType && value.isInstanceOf[Double]) ||
+    (dataType == LongType && value.isInstanceOf[Long]),
+    s"query constant must be a Double or a Long, got $value: $dataType")
+  override def nullable: Boolean = false
+  override def foldable: Boolean = false
+  override def prettyName: String = "query_const"
+  override def toString: String = s"qc($value)"
+  override def eval(input: InternalRow): Any = value
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val javaType = CodeGenerator.javaType(dataType)
+    val ref = ctx.addReferenceObj("qc", value, CodeGenerator.boxedType(dataType))
+    // read once at init into a field, not per row from the array
+    val field = ctx.addMutableState(javaType, "qc", v => s"$v = $ref.${javaType}Value();")
+    ev.copy(code = code"", isNull = FalseLiteral, value = JavaCode.global(field, dataType))
+  }
+}
+
+object QueryConst {
+  def apply(v: Double): QueryConst = QueryConst(v, DoubleType)
+  def apply(v: Long): QueryConst = QueryConst(v, LongType)
+}
+
 /** Column-level API over the expressions above. */
 object sfc {
   private def expr(c: Column): Expression = GraftBridge.expression(c)
@@ -155,6 +186,12 @@ object sfc {
   /** Binary-search membership in sorted disjoint inclusive ranges. */
   def in_sorted_ranges(v: Column, los: Array[Long], his: Array[Long]): Column =
     col(InSortedRanges(expr(v), los, his))
+
+  /** A per-query constant that generated code reads by reference, so
+    * selects differing only in constants share one compiled class. Use
+    * it, not `lit`, for every value that changes from query to query. */
+  def query_const(v: Double): Column = col(QueryConst(v))
+  def query_const(v: Long): Column = col(QueryConst(v))
 
   /** Interleave three non-negative grid coordinates (<= 21 bits each). */
   def morton3_encode(x: Column, y: Column, z: Column): Column =

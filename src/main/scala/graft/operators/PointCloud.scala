@@ -177,7 +177,7 @@ object PointCloud {
     val target = 128L << 20
     val nOut = math.max(1L,
       (pointCount * estBytesPerPoint + target - 1) / target)
-    if (nOut < blocks.rdd.getNumPartitions) blocks.coalesce(nOut.toInt)
+    if (nOut < blocks.queryExecution.toRdd.getNumPartitions) blocks.coalesce(nOut.toInt)
     else blocks
   }
 
@@ -425,7 +425,18 @@ final class BlockedCloud(
     val blocks: DataFrame,
     val meta: CloudMeta) {
 
+  graft.plans.DropImpliedCover.install(spark)
+
   private def totalBits: Int = meta.headLen + meta.tailLen
+
+  /** Per-query constants enter plans as [[sfc.query_const]], never as
+    * `lit`: a literal is written into the generated Java, so every
+    * select would compile its own classes (see PLANS.md). */
+  private def q(v: Double): Column = sfc.query_const(v)
+
+  /** Squared 2D distance of (x, y) to (px, py). */
+  private def dist2(px: Double, py: Double): Column =
+    (col("x") - q(px)) * (col("x") - q(px)) + (col("y") - q(py)) * (col("y") - q(py))
 
   /** Translate an original-coordinate bbox to the quantized grid such
     * that grid coord q in [qMin..qMax] implies q*scale+off in [min..max]. */
@@ -490,7 +501,7 @@ final class BlockedCloud(
     }
 
   private def bboxFilter(b: Bbox): Column =
-    col("x") >= b.xMin && col("x") <= b.xMax && col("y") >= b.yMin && col("y") <= b.yMax
+    col("x") >= q(b.xMin) && col("x") <= q(b.xMax) && col("y") >= q(b.yMin) && col("y") <= q(b.yMax)
 
   /** All points with x in [xMin, xMax] and y in [yMin, yMax] (inclusive). */
   def bboxQuery(b: Bbox): DataFrame = {
@@ -502,8 +513,7 @@ final class BlockedCloud(
     * retrieve_data.py:56-63); boundary inclusive (<= r). */
   def circleQuery(c: Circle): DataFrame = {
     val (contained, partial) = candidates(c.bbox)
-    val d2 = (col("x") - c.cx) * (col("x") - c.cx) + (col("y") - c.cy) * (col("y") - c.cy)
-    contained.unionAll(partial).filter(d2 <= lit(c.r * c.r))
+    contained.unionAll(partial).filter(dist2(c.cx, c.cy) <= q(c.r * c.r))
   }
 
   /** Polygon (with holes) selection, even-odd rule, boundary excluded. */
@@ -557,10 +567,10 @@ final class BlockedCloud(
       val dxc = bx - ax; val dyc = by - ay
       val len2 = dxc * dxc + dyc * dyc
       val t = greatest(lit(0.0), least(lit(1.0),
-        ((col("x") - ax) * dxc + (col("y") - ay) * dyc) / len2))
-      val fx = col("x") - (t * dxc + ax)
-      val fy = col("y") - (t * dyc + ay)
-      fx * fx + fy * fy <= lit(r * r)
+        ((col("x") - q(ax)) * q(dxc) + (col("y") - q(ay)) * q(dyc)) / q(len2)))
+      val fx = col("x") - (t * q(dxc) + q(ax))
+      val fy = col("y") - (t * q(dyc) + q(ay))
+      fx * fx + fy * fy <= q(r * r)
     }.reduce(_ || _)
     contained.unionAll(partial).filter(pred)
   }
@@ -675,8 +685,7 @@ final class BlockedCloud(
       val cand = circleQuery(Circle(px, py, r))
       if (covers || cand.count() >= k) result = cand else r *= 2
     }
-    val d2 = (col("x") - px) * (col("x") - px) + (col("y") - py) * (col("y") - py)
-    (result.orderBy(d2.asc, col("x").asc, col("y").asc, col("z").asc).limit(k),
+    (result.orderBy(dist2(px, py).asc, col("x").asc, col("y").asc, col("z").asc).limit(k),
       rounds, seed)
   }
 
@@ -730,8 +739,8 @@ final class BlockedCloud(
   /** Height refinements (retrieve_data.py:85-101): keep z <= maxZ / z >= minZ.
     * Compose on any query result: cloud.bboxQuery(b).filter(...) — these are
     * the named forms. */
-  def withMaxZ(df: DataFrame, maxZ: Double): DataFrame = df.filter(col("z") <= maxZ)
-  def withMinZ(df: DataFrame, minZ: Double): DataFrame = df.filter(col("z") >= minZ)
+  def withMaxZ(df: DataFrame, maxZ: Double): DataFrame = df.filter(col("z") <= q(maxZ))
+  def withMinZ(df: DataFrame, minZ: Double): DataFrame = df.filter(col("z") >= q(minZ))
 
   /** Per-block occupancy histogram by quadtree cell (reference's side CSV,
     * point_processor.py:77-79). With an even tail length the head IS the

@@ -19,7 +19,13 @@ import org.apache.spark.sql.functions.{col, lit}
   * constant-size generated code) that restores full precision. Fine
   * decompositions are then cheap at the row level, so range budgets
   * can grow with dimensionality instead of being capped by predicate
-  * cost. */
+  * cost.
+  *
+  * The exact conjunct is always emitted, however few the ranges: it
+  * implies the cover, so [[graft.plans.DropImpliedCover]] can drop the
+  * cover's literal bounds from the filter above the scan. Only the
+  * scan's pushed filters then carry per-query literals, and selects
+  * that differ only in their ranges share one compiled class. */
 private[operators] object SfcPredicates {
 
   /** Balanced OR tree: a left-deep reduce of hundreds of ranges
@@ -48,9 +54,7 @@ private[operators] object SfcPredicates {
   /** Scan predicate: head in any of `ranges` (disjoint, any order). */
   def headIn(c: Column, ranges: Seq[(Long, Long)], maxPushed: Int = 48): Column = {
     val sorted = ranges.sortBy(_._1).toIndexedSeq
-    val pushed = orAll(coarsen(sorted, maxPushed).map(between(c, _)))
-    if (sorted.length <= maxPushed) pushed
-    else pushed && graft.functions.sfc.in_sorted_ranges(c,
-      sorted.map(_._1).toArray, sorted.map(_._2).toArray)
+    orAll(coarsen(sorted, maxPushed).map(between(c, _))) &&
+      graft.functions.sfc.in_sorted_ranges(c, sorted.map(_._1).toArray, sorted.map(_._2).toArray)
   }
 }
